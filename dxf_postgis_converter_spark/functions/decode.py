@@ -540,17 +540,37 @@ def _decode_batches(batches, emit_media_ref: bool = True):
         yield pd.DataFrame(data, columns=cols)
 
 
-def _bytes_string_array(vals: list):
+# Arrow's string type stores int32 value offsets: one array holds at most
+# this many bytes
+STRING_ARRAY_MAX_BYTES = 2**31 - 1
+
+
+def bytes_string_array(vals: list):
     """Arrow string array from a list of utf-8 bytes objects, assembled
     via from_buffers (no per-value Python str, no re-validation — the
-    bytes came from a validated Arrow string column or a JSON encoder)."""
+    bytes came from a validated Arrow string column or a JSON encoder).
+    ``None`` becomes a null through a validity bitmap, built only when a
+    ``None`` is present. Raises ValueError rather than wrap the int32
+    offsets when the values total more than STRING_ARRAY_MAX_BYTES."""
     import pyarrow as pa
 
-    data = b"".join(vals)
-    offs = np.zeros(len(vals) + 1, dtype=np.int32)
+    n = len(vals)
+    validity, null_count = None, 0
+    if None in vals:
+        valid = np.fromiter((v is not None for v in vals), dtype=bool, count=n)
+        validity = pa.py_buffer(np.packbits(valid, bitorder="little").tobytes())
+        null_count = n - int(valid.sum())
+        vals = [b"" if v is None else v for v in vals]
+    offs = np.zeros(n + 1, dtype=np.int64)
     np.cumsum([len(v) for v in vals], out=offs[1:])
+    if offs[-1] > STRING_ARRAY_MAX_BYTES:
+        raise ValueError(
+            f"{offs[-1]} bytes of strings in one Arrow batch exceed the int32 "
+            f"offset limit of {STRING_ARRAY_MAX_BYTES} bytes; lower "
+            "spark.sql.execution.arrow.maxRecordsPerBatch")
     return pa.StringArray.from_buffers(
-        len(vals), pa.py_buffer(offs.tobytes()), pa.py_buffer(data))
+        n, pa.py_buffer(offs.astype(np.int32).tobytes()),
+        pa.py_buffer(b"".join(vals)), validity, null_count)
 
 
 def _decode_arrow_batches(batches, emit_media_ref: bool = True):
@@ -600,7 +620,7 @@ def _decode_arrow_batches(batches, emit_media_ref: bool = True):
             if f.name == "media_ref":
                 # fresh buffers (bytes are copies, offsets built here) —
                 # values identical to the input strings
-                arrays.append(_bytes_string_array(refs))
+                arrays.append(bytes_string_array(refs))
             else:
                 arrays.append(pa.array(cols[f.name], f.type))
         yield pa.RecordBatch.from_arrays(arrays, schema=pa_schema)

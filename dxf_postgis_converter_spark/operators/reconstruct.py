@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..corpus import SPANS_SCHEMA, canonical_media_ref
+from ..functions.decode import bytes_string_array
 
 # source-payload extra_data keys (corpus contract; everything else in the
 # stored extra_data was merged in by a converter and is not part of the
@@ -206,11 +207,7 @@ def _rebuild_arrow_batches(batches):
                 separators=(",", ":")).encode()
         import numpy as np
 
-        data = b"".join(outs)
-        offs = np.zeros(n + 1, dtype=np.int32)
-        np.cumsum([len(o) for o in outs], out=offs[1:])
-        refs = pa.StringArray.from_buffers(
-            n, pa.py_buffer(offs.tobytes()), pa.py_buffer(data))
+        refs = bytes_string_array(outs)
         # deep-copy the passthrough columns (take allocates fresh
         # buffers): the output batch must not reference the input
         # batch's IPC-reader-owned memory

@@ -7,19 +7,24 @@ Model
 Work is bucketed by a stable hash of a key column (doc_id by default) —
 the unit of restart. A stage run:
 
-  1. reads the lineage log, collects buckets already COMPLETE for
-     (stage, snapshot_id) and skips them (the resume filter is a narrow
-     JVM predicate on the bucket column — no shuffle);
+  1. reads the lineage log on the driver (pyarrow, no Spark job) and
+     collects buckets already COMPLETE for (stage, snapshot_id); they are
+     skipped by a narrow JVM predicate on the bucket column — no shuffle;
   2. transforms + writes the remaining buckets with **dynamic partition
      overwrite**, so a re-run of a bucket that crashed mid-write replaces
-     its partial files instead of duplicating them;
-  3. counts what actually landed (read-back, not the in-flight DF) and
-     only then appends lineage rows — crash before the append leaves the
-     bucket incomplete and step 1 redoes it on the next run.
+     its partial files instead of duplicating them — this is the stage's
+     one Spark job;
+  3. counts what actually landed (read-back, not the in-flight DF: the
+     footer row counts of the files under each ``_bucket=<b>``
+     directory, summed on the driver) and only then appends lineage
+     rows — crash before the append leaves the bucket incomplete and
+     step 1 redoes it on the next run.
 
 The log itself is an append-only parquet directory (≙ an Iceberg table
 on a real cluster; appends are new files, so concurrent stages never
-rewrite each other). snapshot_id names the source version (Iceberg
+rewrite each other). Each append is one uniquely named file, written
+under a hidden name and renamed into place, so a reader sees all of an
+append or none of it. snapshot_id names the source version (Iceberg
 snapshot at scale; any caller-provided tag here) so re-ingesting a new
 snapshot never confuses resume state.
 """
@@ -28,11 +33,16 @@ from __future__ import annotations
 
 import os
 import time
+import uuid
 from collections.abc import Callable
 
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 BUCKET_COL = "_bucket"
 
@@ -47,6 +57,18 @@ LINEAGE_SCHEMA = T.StructType([
 ])
 
 
+_ARROW_SCHEMA = to_arrow_schema(LINEAGE_SCHEMA)
+
+
+def _visible_files(directory: str) -> list[str]:
+    """Files of ``directory`` that Spark's reader would see: hidden and
+    ``_``-prefixed names (temp files, ``.crc``, ``_SUCCESS``) are skipped."""
+    if not os.path.isdir(directory):
+        return []
+    return [os.path.join(directory, f) for f in sorted(os.listdir(directory))
+            if not f.startswith((".", "_"))]
+
+
 class LineageLog:
     def __init__(self, path: str):
         self.path = path
@@ -54,17 +76,37 @@ class LineageLog:
     def read(self, spark: SparkSession) -> DataFrame:
         if not os.path.isdir(self.path):
             return spark.createDataFrame([], schema=LINEAGE_SCHEMA)
-        return spark.read.parquet(self.path)
+        return spark.read.schema(LINEAGE_SCHEMA).parquet(self.path)
 
     def completed_buckets(self, spark: SparkSession, stage: str, snapshot_id: str) -> list[int]:
-        log = self.read(spark).filter(
-            (F.col("stage") == stage) & (F.col("snapshot_id") == snapshot_id)
-            & (F.col("status") == "COMPLETE"))
-        return [r[BUCKET_COL] for r in log.select(BUCKET_COL).distinct().collect()]
+        """Buckets with a COMPLETE row for (stage, snapshot_id), read on
+        the driver; ``spark`` is unused and kept for the call shape."""
+        files = _visible_files(self.path)
+        if not files:
+            return []
+        done = ds.dataset(files, schema=_ARROW_SCHEMA, format="parquet").to_table(
+            columns=[BUCKET_COL],
+            filter=(ds.field("stage") == stage) & (ds.field("snapshot_id") == snapshot_id)
+            & (ds.field("status") == "COMPLETE"))
+        return sorted(set(done.column(BUCKET_COL).to_pylist()))
 
-    def append(self, spark: SparkSession, rows: list[dict]) -> None:
-        spark.createDataFrame(rows, schema=LINEAGE_SCHEMA) \
-            .coalesce(1).write.mode("append").parquet(self.path)
+    def append(self, rows: list[dict]) -> None:
+        """Add ``rows`` as one new parquet file, written under a hidden
+        temp name and renamed into place: readers see all of it or none."""
+        os.makedirs(self.path, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.path, f".{name}.tmp")
+        pq.write_table(pa.Table.from_pylist(rows, schema=_ARROW_SCHEMA), tmp)
+        os.replace(tmp, os.path.join(self.path, name))
+
+
+def _landed_rows(out_dir: str, buckets: list[int]) -> dict[int, int]:
+    """Rows on disk per bucket: the parquet footer ``num_rows`` of every
+    file under ``_bucket=<b>``, which is what Spark's reader would count
+    for those partitions."""
+    return {b: sum(pq.read_metadata(f).num_rows
+                   for f in _visible_files(os.path.join(out_dir, f"{BUCKET_COL}={b}")))
+            for b in buckets}
 
 
 def bucket_of(key_col: str, n_buckets: int) -> F.Column:
@@ -116,18 +158,12 @@ def run_stage(
         .option("compression", INTERMEDIATE_CODEC) \
         .partitionBy(BUCKET_COL).parquet(out_dir)
 
-    landed = (
-        spark.read.parquet(out_dir)
-        .filter(F.col(BUCKET_COL).isin(todo))
-        .groupBy(BUCKET_COL).agg(F.count("*").alias("row_count"))
-        .collect()
-    )
-    counts = {r[BUCKET_COL]: r["row_count"] for r in landed}
+    counts = _landed_rows(out_dir, todo)
     wall = time.time() - t0
     now = time.time()
-    lineage.append(spark, [
+    lineage.append([
         {"stage": stage, "snapshot_id": snapshot_id, BUCKET_COL: b,
-         "row_count": counts.get(b, 0), "status": "COMPLETE",
+         "row_count": counts[b], "status": "COMPLETE",
          "wall_sec": round(wall, 3), "ts": now}
         for b in todo
     ])

@@ -235,3 +235,48 @@ def test_no_orjson_fallback_importable_and_equivalent():
         sys.modules.pop(dec.__name__, None)
         sys.modules.update(saved)
         importlib.import_module(dec.__name__)
+
+
+def test_null_media_ref_is_one_error_row(spark):
+    """A null media_ref becomes one error row with a null media_ref, on
+    both decode paths; it must not fail its Arrow batch or change any
+    other row."""
+    from dxf_postgis_converter_spark.corpus import SPANS_SCHEMA, build_document
+    from dxf_postgis_converter_spark.functions.decode import decode_documents
+
+    docs = [build_document(i) for i in range(3)]
+    doc_id, spans = docs[1]
+    hit = next(s for s in spans if s["kind"] == "media")
+    broken = list(docs)
+    broken[1] = (doc_id, [dict(s, media_ref=None) if s is hit else s for s in spans])
+
+    def decoded(rows, use_arrow):
+        df = decode_documents(spark.createDataFrame(rows, SPANS_SCHEMA), use_arrow=use_arrow)
+        return {(r.doc_id, r.span_offset): r for r in df.collect()}
+
+    good = decoded(docs, True)
+    assert not [r for r in good.values() if r.error is not None]
+    for use_arrow in (True, False):
+        bad = decoded(broken, use_arrow)
+        assert bad.keys() == good.keys()
+        assert [k for k in good if bad[k] != good[k]] == [(doc_id, hit["offset"])]
+        row = bad[(doc_id, hit["offset"])]
+        assert row.error is not None and row.media_ref is None
+        assert row.entity_type == "UNKNOWN"
+        assert sum(r.error is not None for r in bad.values()) == 1
+
+
+def test_bytes_string_array_nulls_and_offset_limit(monkeypatch):
+    """Nulls go through the validity bitmap; a column past the int32
+    offset range raises instead of wrapping (checked on a lowered limit)."""
+    import dxf_postgis_converter_spark.functions.decode as dec
+
+    arr = dec.bytes_string_array([b"a", None, b"bc", None])
+    arr.validate(full=True)
+    assert arr.to_pylist() == ["a", None, "bc", None] and arr.null_count == 2
+    assert dec.bytes_string_array([b"ab", b"c"]).null_count == 0
+
+    monkeypatch.setattr(dec, "STRING_ARRAY_MAX_BYTES", 10)
+    assert dec.bytes_string_array([b"abcde", b"fghij"]).to_pylist() == ["abcde", "fghij"]
+    with pytest.raises(ValueError, match="int32 offset limit"):
+        dec.bytes_string_array([b"abcde", b"fghij", b"k"])

@@ -1,9 +1,11 @@
 """Driver-contract invariants: every oracle has a query, names are
 stable identifiers, entry() exists — drift guard for __spark_entry__."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry_mod
 
@@ -35,7 +37,7 @@ def test_value_hash_properties():
     hash differently — the r1 HUGEINT lesson)."""
     import pandas as pd
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, os.path.join(REPO, "scripts"))
     from selfcheck import value_hash
 
     pdf = pd.DataFrame({"x": [1, 2], "s": ["a", "b"], "v": [2.5, 3.5]})
