@@ -8,7 +8,7 @@ re-expressed Spark-first:
   ``documents(doc_id string, spans array<struct<kind,text,media_ref,offset>>)``
   where ``kind='media'`` spans carry one DXF entity payload (JSON) and
   ``kind='text'`` spans carry annotation text.
-- Decode: one Arrow-batched ``mapInPandas`` UDF implementing the reference's
+- Decode: one Arrow-batched ``mapInArrow`` UDF implementing the reference's
   37 entity→geometry converters (``postgis_entity_converter.py:29-747``)
   bit-identically (same 100-point tessellation, same formulas).
 - Index: planar quadtree cell grid (H3/S2-analogue; those libs are not

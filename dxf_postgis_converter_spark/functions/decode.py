@@ -1,5 +1,5 @@
 """Entity→geometry decode: the reference's 37 converters as ONE
-Arrow-batched mapInPandas stage.
+Arrow-batched mapInArrow stage.
 
 Reference dispatch table: postgis_entity_converter.py:29-70 (`to_db`
 driver :72-110). Each `_cv_*` below reproduces the corresponding
@@ -11,7 +11,7 @@ entity bounding boxes, not exact geometry).
 Spark shape:  documents(doc_id, spans)
   → explode(spans)                      [JVM]
   → filter kind='media'                 [JVM]
-  → mapInPandas(_decode_batches)        [one Arrow-batched Python stage]
+  → mapInArrow(_decode_arrow_batches)   [one Arrow-batched Python stage]
   → entities(doc_id, span_offset, handle, layer, entity_type, name,
              geometry_wkb, geom_type, xmin, ymin, xmax, ymax,
              data_json, media_ref)
@@ -27,16 +27,12 @@ from __future__ import annotations
 import json
 import math
 
-try:  # optional fast path; byte format of data_json is NOT contractual
-    # (only the reconstructed media_ref must byte-match the corpus
-    # canonical form — see operators/reconstruct.py), so orjson's float
-    # notation differences are harmless here
-    import orjson as _orjson
-except ImportError:  # pragma: no cover
-    _orjson = None
-
 import numpy as np
-import pandas as pd
+# the byte format of data_json is NOT contractual (only the reconstructed
+# media_ref must byte-match the corpus canonical form — see
+# operators/reconstruct.py), so orjson's float notation is harmless here
+import orjson as _orjson
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -48,6 +44,7 @@ from ..geometry.wkb import (
     wkb_point,
     wkb_polygon,
 )
+from .arrow_batch import arrow_schema, bytes_string_array, from_rows, owned
 
 # ---------------------------------------------------------------------------
 # scalar converters (payload geometry dict -> (kind, coords, extra_updates))
@@ -412,42 +409,68 @@ def _encode(kind, coords):
     return wkb_multipolygon(arrs), "MULTIPOLYGON", (xs.min(), ys.min(), xs.max(), ys.max())
 
 
-if _orjson is not None:
-    def _dumps(obj) -> str:
-        try:
-            return _orjson.dumps(obj, option=_orjson.OPT_SORT_KEYS).decode()
-        except TypeError:  # exotic value types: defer to stdlib
-            return json.dumps(obj, ensure_ascii=False, sort_keys=True,
-                              separators=(",", ":"))
-
-    _loads = _orjson.loads
-else:  # pragma: no cover
-    def _dumps(obj) -> str:
+def _dumps(obj) -> str:
+    try:
+        return _orjson.dumps(obj, option=_orjson.OPT_SORT_KEYS).decode()
+    except TypeError:  # exotic value types: defer to stdlib
         return json.dumps(obj, ensure_ascii=False, sort_keys=True,
                           separators=(",", ":"))
 
-    _loads = json.loads
+
+_loads = _orjson.loads
 
 
-def convert_entity(payload: dict):
+def convert_entity(payload):
     """One media payload -> dict of entity columns (None geometry on
     no-geometry types or converter failure; failure message in `error`).
 
     Mirrors PostGISEntityConverter.to_db (postgis_entity_converter.py:72-110):
     unsupported type → error; converter _Fail → error; extra_data =
-    payload.extra_data ∪ converter updates (:137-142).
+    payload.extra_data ∪ converter updates (:137-142). A payload that is
+    not a JSON object converts like unparseable JSON (UNKNOWN); one with
+    a wrongly typed field gives an UNKNOWN row naming the failure.
     """
     return dict(zip(_REC_COLS, _convert_entity_rec(payload)))
 
 
-def _convert_entity_rec(payload: dict) -> tuple:
+# what an unparseable or non-object media_ref decodes as
+_UNKNOWN = {"entity_type": "UNKNOWN"}
+
+
+def _wrong_field_type(texts, objects):
+    """Why the payload's fields cannot convert, or None: every text field
+    must be a str or null (any other value would fail the whole Arrow
+    batch at assembly) and every object field a dict (empty values were
+    already replaced by {})."""
+    for v in texts:
+        if v is not None and type(v) is not str:
+            return f"{type(v).__name__} in a text field"
+    for v in objects:
+        if type(v) is not dict:
+            return f"{type(v).__name__} in an object field"
+    return None
+
+
+def _convert_entity_rec(payload) -> tuple:
     """convert_entity's hot-loop core: the same columns as a plain tuple
     in _REC_COLS order — the Arrow batch loops build one tuple per row
     instead of a 12-key dict plus a re-gather (measured ~10% of decode
     compute at 60k rows)."""
+    if type(payload) is not dict:  # valid JSON, but not an object
+        payload = _UNKNOWN
     etype = payload.get("entity_type", "UNKNOWN")
+    name = payload.get("name", "")
+    handle = payload.get("handle", "")
+    layer = payload.get("layer", "")
+    attrs = payload.get("attributes", {}) or {}
     geoms = payload.get("geometries", {}) or {}
-    extra = dict(payload.get("extra_data", {}) or {})
+    extra = payload.get("extra_data", {}) or {}
+    if not (type(etype) is type(name) is type(handle) is type(layer) is str
+            and type(attrs) is type(geoms) is type(extra) is dict):
+        wrong = _wrong_field_type((etype, name, handle, layer), (attrs, geoms, extra))
+        if wrong is not None:
+            return _convert_entity_rec(_UNKNOWN)[:-1] + (f"malformed payload: {wrong}",)
+    extra = dict(extra)
     cv = _CONVERTERS.get(etype)
     error = None
     kind = coords = None
@@ -466,15 +489,12 @@ def _convert_entity_rec(payload: dict) -> tuple:
             kind = coords = None
             error = f"{etype}: {type(e).__name__}: {e}"
     wkb, gtype, bbox = _encode(kind, coords)
-    name = payload.get("name", "")
-    handle = payload.get("handle", "")
-    layer = payload.get("layer", "")
     data = {
         "entity_type": etype,
         "name": name,
         "handle": handle,
         "layer": layer,
-        "attributes": payload.get("attributes", {}) or {},
+        "attributes": attrs,
         "geometries": geoms,
         "extra_data": extra,
     }
@@ -503,6 +523,8 @@ ENTITY_SCHEMA = T.StructType([
 ])
 
 
+# ENTITY_SCHEMA's order without doc_id, span_offset and media_ref, the
+# columns the batch loop passes to from_rows whole
 _REC_COLS = ("handle", "layer", "entity_type", "name", "geometry_wkb",
              "geom_type", "xmin", "ymin", "xmax", "ymax", "data_json", "error")
 
@@ -513,126 +535,43 @@ ENTITY_SCHEMA_NOREF = T.StructType(
     [f for f in ENTITY_SCHEMA.fields if f.name != "media_ref"])
 
 
-def _decode_batches(batches, emit_media_ref: bool = True):
-    schema = ENTITY_SCHEMA if emit_media_ref else ENTITY_SCHEMA_NOREF
-    cols = [f.name for f in schema.fields]
-    for pdf in batches:
-        n = len(pdf)
-        if n == 0:
-            continue
-        refs = pdf["media_ref"].to_numpy()
-        # one list per output column, appended in lock-step (≈2x faster
-        # than per-row dict scatter at 10^4-row Arrow batches)
-        recs = []
-        append = recs.append
-        loads = _loads
-        for i in range(n):
-            try:
-                payload = loads(refs[i])
-            except (TypeError, ValueError):
-                payload = {"entity_type": "UNKNOWN"}
-            append(_convert_entity_rec(payload))
-        data = dict(zip(_REC_COLS, zip(*recs)))
-        data["doc_id"] = pdf["doc_id"].to_numpy()
-        data["span_offset"] = pdf["offset"].astype("int32").to_numpy()
-        if emit_media_ref:
-            data["media_ref"] = refs
-        yield pd.DataFrame(data, columns=cols)
-
-
-# Arrow's string type stores int32 value offsets: one array holds at most
-# this many bytes
-STRING_ARRAY_MAX_BYTES = 2**31 - 1
-
-
-def bytes_string_array(vals: list):
-    """Arrow string array from a list of utf-8 bytes objects, assembled
-    via from_buffers (no per-value Python str, no re-validation — the
-    bytes came from a validated Arrow string column or a JSON encoder).
-    ``None`` becomes a null through a validity bitmap, built only when a
-    ``None`` is present. Raises ValueError rather than wrap the int32
-    offsets when the values total more than STRING_ARRAY_MAX_BYTES."""
-    import pyarrow as pa
-
-    n = len(vals)
-    validity, null_count = None, 0
-    if None in vals:
-        valid = np.fromiter((v is not None for v in vals), dtype=bool, count=n)
-        validity = pa.py_buffer(np.packbits(valid, bitorder="little").tobytes())
-        null_count = n - int(valid.sum())
-        vals = [b"" if v is None else v for v in vals]
-    offs = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum([len(v) for v in vals], out=offs[1:])
-    if offs[-1] > STRING_ARRAY_MAX_BYTES:
-        raise ValueError(
-            f"{offs[-1]} bytes of strings in one Arrow batch exceed the int32 "
-            f"offset limit of {STRING_ARRAY_MAX_BYTES} bytes; lower "
-            "spark.sql.execution.arrow.maxRecordsPerBatch")
-    return pa.StringArray.from_buffers(
-        n, pa.py_buffer(offs.astype(np.int32).tobytes()),
-        pa.py_buffer(b"".join(vals)), validity, null_count)
-
-
 def _decode_arrow_batches(batches, emit_media_ref: bool = True):
-    """mapInArrow twin of _decode_batches: same per-payload conversion,
-    but rows enter/leave as pyarrow RecordBatches — no pandas block
-    construction on either side of the boundary."""
-    import pyarrow as pa
-
-    schema = ENTITY_SCHEMA if emit_media_ref else ENTITY_SCHEMA_NOREF
-    pa_schema = pa.schema(
-        [pa.field("doc_id", pa.string()), pa.field("span_offset", pa.int32()),
-         pa.field("handle", pa.string()), pa.field("layer", pa.string()),
-         pa.field("entity_type", pa.string()), pa.field("name", pa.string()),
-         pa.field("geometry_wkb", pa.binary()), pa.field("geom_type", pa.string()),
-         pa.field("xmin", pa.float64()), pa.field("ymin", pa.float64()),
-         pa.field("xmax", pa.float64()), pa.field("ymax", pa.float64()),
-         pa.field("data_json", pa.string())]
-        + ([pa.field("media_ref", pa.string())] if emit_media_ref else [])
-        + [pa.field("error", pa.string())])
+    """Per-payload conversion over pyarrow RecordBatches: rows enter and
+    leave as Arrow, with no pandas block on either side of the boundary.
+    A null, unparseable or non-object media_ref gives one UNKNOWN error
+    row; no row can fail its batch."""
+    schema = arrow_schema(ENTITY_SCHEMA if emit_media_ref else ENTITY_SCHEMA_NOREF)
     loads = _loads
     for batch in batches:
         n = batch.num_rows
         if n == 0:
             continue
         idx = batch.schema.get_field_index
-        doc_ids = batch.column(idx("doc_id")).to_pylist()
         # parse from BYTES (binary view of the string column): skips the
         # utf-8 → Python-str decode that to_pylist() on a string column
         # pays, and orjson parses bytes directly. to_pylist() COPIES into
-        # Python bytes — the output batch must never reference the input
-        # batch's buffers (keeps the IPC writer's memory lifetime
-        # independent of the reader's).
+        # Python bytes, so the media_ref output owns its buffers.
         refs = batch.column(idx("media_ref")).cast(pa.binary()).to_pylist()
-        offsets = batch.column(idx("offset")).to_pylist()
         recs = []
         append = recs.append
         for i in range(n):
             try:
                 payload = loads(refs[i])
             except (TypeError, ValueError):
-                payload = {"entity_type": "UNKNOWN"}
+                payload = _UNKNOWN
             append(_convert_entity_rec(payload))
-        cols = dict(zip(_REC_COLS, zip(*recs)))
-        arrays = [pa.array(doc_ids, pa.string()),
-                  pa.array(offsets, pa.int32())]
-        for f in list(pa_schema)[2:]:
-            if f.name == "media_ref":
-                # fresh buffers (bytes are copies, offsets built here) —
-                # values identical to the input strings
-                arrays.append(bytes_string_array(refs))
-            else:
-                arrays.append(pa.array(cols[f.name], f.type))
-        yield pa.RecordBatch.from_arrays(arrays, schema=pa_schema)
+        out = {"doc_id": owned(batch.column(idx("doc_id"))),
+               "span_offset": owned(batch.column(idx("offset")))}
+        if emit_media_ref:
+            out["media_ref"] = bytes_string_array(refs)
+        yield from_rows(schema, recs, **out)
 
 
-def decode_documents(documents: DataFrame, keep_media_ref: bool = True,
-                     use_arrow: bool = True) -> DataFrame:
+def decode_documents(documents: DataFrame, keep_media_ref: bool = True) -> DataFrame:
     """documents(doc_id, spans) -> entities DataFrame (see module doc).
 
     The explode + filter stay JVM-side (whole-stage codegen); only the
-    media spans cross into Python, in Arrow batches (mapInArrow by
-    default — the pandas twin is kept for A/B equality testing).
+    media spans cross into Python, in Arrow batches (mapInArrow).
     """
     spans = documents.select(
         "doc_id",
@@ -644,12 +583,8 @@ def decode_documents(documents: DataFrame, keep_media_ref: bool = True,
         F.col("span.kind").alias("kind"),
     ).filter(F.col("kind") == "media").drop("kind")
     schema = ENTITY_SCHEMA if keep_media_ref else ENTITY_SCHEMA_NOREF
-    if use_arrow:
-        return spans.mapInArrow(
-            lambda it: _decode_arrow_batches(it, emit_media_ref=keep_media_ref),
-            schema=schema)
-    return spans.mapInPandas(
-        lambda it: _decode_batches(it, emit_media_ref=keep_media_ref),
+    return spans.mapInArrow(
+        lambda it: _decode_arrow_batches(it, emit_media_ref=keep_media_ref),
         schema=schema)
 
 

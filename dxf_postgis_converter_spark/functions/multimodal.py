@@ -317,8 +317,8 @@ def synthetic_assets(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
 # codec seam
 # --------------------------------------------------------------------------
 
-try:  # optional dependency (same pattern as decode.py's orjson): the
-    # codec seam auto-upgrades to a real decoder wherever PIL exists
+try:  # optional dependency: the codec seam auto-upgrades to a real
+    # decoder wherever PIL exists
     from PIL import Image as _PIL_Image
     from PIL import UnidentifiedImageError as _PILUnidentified
 except ImportError:  # pragma: no cover - PIL present in some deployments

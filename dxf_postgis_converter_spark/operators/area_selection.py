@@ -10,7 +10,7 @@ never selected, mirroring ezdxf skipping empty bounding boxes.
 Spark-first: RECTANGLE and CIRCLE rules are pure column arithmetic
 (whole-stage codegen, no Python). POLYGON prefilters JVM-side with the
 polygon's own bbox, then refines the survivors in one Arrow-batched
-mapInPandas pass.
+mapInArrow pass.
 """
 
 from __future__ import annotations
@@ -18,10 +18,10 @@ from __future__ import annotations
 from enum import Enum
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.arrow_batch import owned
 from ..geometry.predicates import polygon_bbox_inside, polygon_bbox_overlap
 
 
@@ -88,8 +88,9 @@ def area_predicate(shape_type: ShapeType, rule: SelectionRule, shape_args) -> tu
     For RECTANGLE/CIRCLE the returned column IS the full predicate.
     For POLYGON the column is the JVM prefilter (polygon-bbox overlap, or
     None for OUTSIDE which needs post-refine complement) and the second
-    element is a pandas refiner fn(pdf)->np.ndarray[bool] for rule INSIDE/
-    INTERSECT membership.
+    element is a refiner fn(batch)->np.ndarray[bool] over a pyarrow
+    RecordBatch carrying the bbox columns, for rule INSIDE/INTERSECT
+    membership.
     """
     shape_type = ShapeType(shape_type)
     rule = SelectionRule(rule)
@@ -115,18 +116,17 @@ def area_predicate(shape_type: ShapeType, rule: SelectionRule, shape_args) -> tu
     px1, py1 = ring[:, 0].max(), ring[:, 1].max()
     prefilter = _rect_overlap(px0, py0, px1, py1)
 
+    def refiner(test):
+        def refine(batch) -> np.ndarray:
+            boxes = zip(*(batch.column(c).to_pylist() for c in _B))
+            return np.fromiter((test(ring, *box) for box in boxes),
+                               dtype=bool, count=batch.num_rows)
+        return refine
+
     if rule == SelectionRule.INSIDE:
-        def refine(pdf: pd.DataFrame) -> np.ndarray:
-            return np.fromiter(
-                (polygon_bbox_inside(ring, *row) for row in pdf[list(_B)].itertuples(index=False)),
-                dtype=bool, count=len(pdf))
-        return prefilter, refine
+        return prefilter, refiner(polygon_bbox_inside)
 
-    def refine_overlap(pdf: pd.DataFrame) -> np.ndarray:
-        return np.fromiter(
-            (polygon_bbox_overlap(ring, *row) for row in pdf[list(_B)].itertuples(index=False)),
-            dtype=bool, count=len(pdf))
-
+    refine_overlap = refiner(polygon_bbox_overlap)
     if rule == SelectionRule.INTERSECT:
         return prefilter, refine_overlap
     # OUTSIDE = complement of overlap: no safe JVM prefilter (rows outside
@@ -142,16 +142,13 @@ def select_entities(entities: DataFrame, shape_type, rule, shape_args) -> DataFr
     if refine is None:
         return ents.filter(pred)
 
-    schema_out = ents.schema
-
-    def _apply(batches, fn, negate):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mask = fn(pdf)
+    def _apply(batches, negate):
+        for batch in batches:
+            mask = refine(batch)
             if negate:
                 mask = ~mask
-            yield pdf[mask]
+            if mask.any():
+                yield owned(batch, np.flatnonzero(mask))
 
     if rule == SelectionRule.OUTSIDE:
         ring = np.asarray(shape_args[0], dtype=np.float64)[:, :2]
@@ -159,11 +156,11 @@ def select_entities(entities: DataFrame, shape_type, rule, shape_args) -> DataFr
         px1, py1 = float(ring[:, 0].max()), float(ring[:, 1].max())
         trivially_out = ents.filter(~_rect_overlap(px0, py0, px1, py1))
         maybe = ents.filter(_rect_overlap(px0, py0, px1, py1))
-        refined = maybe.mapInPandas(lambda it: _apply(it, refine, True), schema=schema_out)
+        refined = maybe.mapInArrow(lambda it: _apply(it, True), schema=ents.schema)
         return trivially_out.unionByName(refined)
 
     candidates = ents.filter(pred)
-    return candidates.mapInPandas(lambda it: _apply(it, refine, False), schema=schema_out)
+    return candidates.mapInArrow(lambda it: _apply(it, False), schema=ents.schema)
 
 
 def select_handles(entities: DataFrame, shape_type, rule, shape_args) -> DataFrame:

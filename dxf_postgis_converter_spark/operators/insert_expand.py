@@ -33,7 +33,7 @@ parent, so the substituted attributes downstream consumers (SVG styling,
 ByLayer snapshots) see are already concrete.
 
 Scale shape: the closure is EMBEDDED in each INSERT row's payload at
-ingest, so expansion is one ``mapInPandas`` over the INSERT rows — zero
+ingest, so expansion is one ``mapInArrow`` over the INSERT rows — zero
 shuffles, zero driver actions, no join against a block-definition table;
 the work distributes exactly like decode (tests pin the no-Exchange
 plan). Depth is bounded by the ingest-time cycle guard plus
@@ -46,11 +46,12 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.arrow_batch import arrow_schema, from_rows
 from ..functions.decode import _CONVERTERS, _dumps, _encode, _loads
 
 # entity kinds whose extra_data.rotation is a drawn orientation that the
@@ -222,51 +223,44 @@ EXPANDED_SCHEMA = T.StructType([
 
 
 def _expand_batches(batches, max_depth: int):
-    cols = [f.name for f in EXPANDED_SCHEMA.fields]
-    for pdf in batches:
+    """mapInArrow body: every INSERT row → its virtual-entity rows. A
+    payload that is not JSON, not an object, or not shaped like an
+    INSERT closure gives one ERROR record instead of failing the batch
+    (no silent drops: the insert does not vanish either)."""
+    schema = arrow_schema(EXPANDED_SCHEMA)
+    for batch in batches:
+        idx = batch.schema.get_field_index
+        doc_ids, offs, handles = (batch.column(idx(c)).to_pylist()
+                                  for c in ("doc_id", "span_offset", "handle"))
+        djs = batch.column(idx("data_json")).cast(pa.binary()).to_pylist()
         rows = []
-        # null masks once per batch (vectorized), not pd.isna per row: a
-        # null IntegerType column arrives from Arrow as float64 NaN, and
-        # int(NaN) raises — killing the whole batch against the per-row
-        # containment contract
-        off_na = pdf["span_offset"].isna().to_numpy()
-        dj_na = pdf["data_json"].isna().to_numpy()
-        for i, (doc_id, off, handle, dj) in enumerate(zip(
-                pdf["doc_id"], pdf["span_offset"], pdf["handle"],
-                pdf["data_json"])):
-            off = None if off_na[i] else int(off)
-            if dj_na[i]:
+        for doc_id, off, handle, dj in zip(doc_ids, offs, handles, djs):
+            if dj is None:
                 continue  # decode already reported this row's error
             try:
-                payload = _loads(dj)
+                recs = expand_payload(_loads(dj), max_depth=max_depth)
             except Exception as e:
-                # same no-silent-drops contract as decode: a corrupt
-                # payload yields an ERROR record, not a vanished insert
                 rows.append((doc_id, off, handle, "", 0, "INSERT", "",
                              None, None, None, None, None, None, None,
                              f"INSERT payload unparseable: "
                              f"{type(e).__name__}: {e}"))
                 continue
-            for rec in expand_payload(payload, max_depth=max_depth):
+            for rec in recs:
                 rows.append((doc_id, off, handle) + rec)
         if rows:
-            # column-wise assembly: pd.DataFrame over a row list re-infers
-            # per cell; zip-transpose + per-column construction is ~2-3x
-            # faster at these widths (same trick as decode's batch loop)
-            yield pd.DataFrame(dict(zip(cols, zip(*rows))), columns=cols)
-        else:
-            yield pd.DataFrame({c: [] for c in cols}, columns=cols)
+            yield from_rows(schema, rows)
 
 
 def expand_inserts(entities: DataFrame, max_depth: int = 32) -> DataFrame:
     """Entities table → virtual entities of every INSERT row.
 
-    One Arrow-batched ``mapInPandas`` over the INSERT rows; the
+    One Arrow-batched ``mapInArrow`` over the INSERT rows; the
     ``entity_type`` filter and 4-column projection push to the scan, and
-    the stage introduces no Exchange (pinned in tests/test_plans).
+    the stage introduces no Exchange (pinned in tests/test_insert_expand
+    and scripts/plan_audit.py).
     """
     src = (entities
            .filter(F.col("entity_type") == "INSERT")
            .select("doc_id", "span_offset", "handle", "data_json"))
-    return src.mapInPandas(
+    return src.mapInArrow(
         lambda it: _expand_batches(it, max_depth), schema=EXPANDED_SCHEMA)

@@ -12,7 +12,7 @@ entities + text spans, and the gate is **span-sequence equality
 
 Spark shape (one narrow Python stage, everything else JVM):
 
-  entities --mapInPandas--> (doc_id, span_offset, media_ref')   [Arrow]
+  entities --mapInArrow--> (doc_id, span_offset, media_ref')    [Arrow]
   text spans ---------------------------------------- select     [JVM]
   union → groupBy(doc_id) → array_sort(collect_list(struct))     [JVM]
   → documents'(doc_id, spans)
@@ -27,21 +27,15 @@ extra_data; we strip it back off).
 
 from __future__ import annotations
 
-import json
-import re
-
-try:
-    import orjson as _orjson
-except ImportError:  # pragma: no cover
-    _orjson = None
-
-import pandas as pd
+import numpy as np
+import orjson
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..corpus import SPANS_SCHEMA, canonical_media_ref
-from ..functions.decode import bytes_string_array
+from ..functions.arrow_batch import arrow_schema, bytes_string_array, from_rows, owned
 
 # source-payload extra_data keys (corpus contract; everything else in the
 # stored extra_data was merged in by a converter and is not part of the
@@ -59,59 +53,38 @@ _REF_SCHEMA = T.StructType([
 ])
 
 
-# floats whose rendering might differ between orjson and stdlib json:
-# fixed-notation values below 1e-4 (stdlib switches to exponent there) or
-# any exponent-notation number. Payloads matching this re-serialize with
-# stdlib json — the canonical format. Sound because every disagreement
-# case necessarily leaves one of these byte patterns in the orjson output;
-# false positives only cost the slow path on that row.
-_FLOAT_RISK = re.compile(rb"0\.0000|\d[eE][-+]?\d")
-
-
-def _canonical_dumps_fast(d: dict) -> str:
-    """Byte-compatible fast canonical serialization: orjson (≈4x faster)
-    when its output provably matches stdlib json's canonical form, else
-    stdlib json (ensure_ascii=False, sort_keys, compact separators)."""
-    if _orjson is not None:
-        try:
-            out = _orjson.dumps(d, option=_orjson.OPT_SORT_KEYS)
-        except TypeError:
-            pass
-        else:
-            if not _FLOAT_RISK.search(out):
-                return out.decode()
-    return json.dumps(d, ensure_ascii=False, sort_keys=True, separators=(",", ":"))
-
-
-_loads = json.loads if _orjson is None else _orjson.loads
-
-
-def _rebuild_one(dj: str) -> str:
-    d = _loads(dj)
+def _source_payload(d: dict) -> dict:
+    """The corpus payload behind a stored data_json object: its seven
+    canonical keys, with the converter-derived extra_data keys dropped."""
     extra = d.get("extra_data", {}) or {}
-    src_extra = {k: extra[k] for k in RT_EXTRA_KEYS if k in extra}
-    return _canonical_dumps_fast({
+    return {
         "attributes": d.get("attributes", {}) or {},
         "entity_type": d.get("entity_type", ""),
-        "extra_data": src_extra,
+        "extra_data": {k: extra[k] for k in RT_EXTRA_KEYS if k in extra},
         "geometries": d.get("geometries", {}) or {},
         "handle": d.get("handle", ""),
         "layer": d.get("layer", ""),
         "name": d.get("name", ""),
-    })
+    }
 
 
 def _risky_rows(outs: list, n_rows: int) -> set[int]:
-    """Row indices whose serialized bytes contain a float-risk pattern
-    (the _FLOAT_RISK regex), found by ONE vectorized scan over the
-    batch's concatenated bytes instead of n_rows regex searches — the
-    per-row regex was ~half the rebuild stage's Python time (measured
-    11 µs/row over 615-byte rows). Cross-row false positives are
-    impossible: every row starts '{' and ends '}', so neither pattern
-    can span a boundary. A false positive would only cost the stdlib
-    re-dump on that row; the masks below match the regex exactly."""
-    import numpy as np
+    """Row indices whose orjson rendering might differ from stdlib json's
+    canonical form; those rows re-serialize with stdlib json.
 
+    The two render only floats differently, and only where one of them
+    uses exponent notation: stdlib switches to it below 1e-4 (orjson
+    keeps fixed notation there, which starts ``0.0000``) and from 1e16
+    (orjson uses exponents there too, without the ``+``). So every
+    disagreement leaves one of two byte patterns in the orjson output:
+    ``0.0000``, or an exponent (digit, ``e``/``E``, optional sign,
+    digit). One vectorized scan over the batch's concatenated bytes
+    finds both, instead of n_rows regex searches — the per-row regex was
+    ~half the rebuild stage's Python time (measured 11 µs/row over
+    615-byte rows).
+    Cross-row false positives are impossible: every row is empty or
+    starts '{' and ends '}', so neither pattern can span a boundary. A
+    false positive would only cost the stdlib re-dump on that row."""
     buf = b"".join(outs)
     a = np.frombuffer(buf, dtype=np.uint8)
     if len(a) < 3:
@@ -152,90 +125,41 @@ def _risky_rows(outs: list, n_rows: int) -> set[int]:
 
 
 def _rebuild_arrow_batches(batches):
-    """mapInArrow rebuild: doc_id/span_offset pass through untouched as
-    Arrow arrays; data_json is parsed from BYTES (zero-copy binary view
-    of the string column — no utf-8 → str decode), extra_data is
-    filtered IN PLACE (orjson preserves the stored canonical key order,
-    and OPT_SORT_KEYS re-canonicalizes the rebuilt extra_data), and the
+    """mapInArrow rebuild: doc_id/span_offset pass through as owned
+    copies; data_json is parsed from BYTES (binary view of the string
+    column — no utf-8 → str decode), re-serialized with orjson, and the
     output string column is assembled straight from the serialized
-    bytes via Array.from_buffers — no pandas block, no per-row str."""
-    import pyarrow as pa
-
+    bytes. A null, non-JSON, non-object or wrongly shaped data_json
+    gives a null media_ref, which span_mismatches flags."""
+    schema = arrow_schema(_REF_SCHEMA)
+    loads, dumps, opt = orjson.loads, orjson.dumps, orjson.OPT_SORT_KEYS
     for batch in batches:
         n = batch.num_rows
         if n == 0:
             continue
         idx = batch.schema.get_field_index
         djs = batch.column(idx("data_json")).cast(pa.binary()).to_pylist()
-        outs: list[bytes] = []
+        outs = []
         append = outs.append
-        loads, dumps = _orjson.loads, _orjson.dumps
-        opt = _orjson.OPT_SORT_KEYS
         for dj in djs:
-            d = loads(dj)
-            extra = d.get("extra_data", {}) or {}
-            d["attributes"] = d.get("attributes", {}) or {}
-            d["entity_type"] = d.get("entity_type", "")
-            d["extra_data"] = {k: extra[k] for k in RT_EXTRA_KEYS
-                               if k in extra}
-            d["geometries"] = d.get("geometries", {}) or {}
-            d["handle"] = d.get("handle", "")
-            d["layer"] = d.get("layer", "")
-            d["name"] = d.get("name", "")
-            if len(d) != 7:  # stored payload carried extra top-level keys
-                d = {k: d[k] for k in ("attributes", "entity_type",
-                                       "extra_data", "geometries",
-                                       "handle", "layer", "name")}
-            append(dumps(d, option=opt))
-        # rows whose orjson rendering has a float-risk pattern re-dump via
-        # stdlib json — the canonical format (same rule as
-        # _canonical_dumps_fast, batched; risk is already established, so
-        # go straight to the stdlib serializer instead of retrying orjson)
-        for i in _risky_rows(outs, n):
-            d = loads(djs[i])
-            extra = d.get("extra_data", {}) or {}
-            outs[i] = json.dumps({
-                "attributes": d.get("attributes", {}) or {},
-                "entity_type": d.get("entity_type", ""),
-                "extra_data": {k: extra[k] for k in RT_EXTRA_KEYS
-                               if k in extra},
-                "geometries": d.get("geometries", {}) or {},
-                "handle": d.get("handle", ""),
-                "layer": d.get("layer", ""),
-                "name": d.get("name", ""),
-            }, ensure_ascii=False, sort_keys=True,
-                separators=(",", ":")).encode()
-        import numpy as np
-
-        refs = bytes_string_array(outs)
-        # deep-copy the passthrough columns (take allocates fresh
-        # buffers): the output batch must not reference the input
-        # batch's IPC-reader-owned memory
-        take_idx = pa.array(np.arange(n, dtype=np.int64))
-        yield pa.RecordBatch.from_arrays(
-            [batch.column(idx("doc_id")).take(take_idx),
-             batch.column(idx("span_offset")).take(take_idx),
-             refs],
-            names=["doc_id", "span_offset", "media_ref"])
-
-
-def _rebuild_batches(batches):
-    for pdf in batches:
-        refs = [_rebuild_one(dj) for dj in pdf["data_json"].tolist()]
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"], "span_offset": pdf["span_offset"], "media_ref": refs})
+            try:
+                append(dumps(_source_payload(loads(dj)), option=opt))
+            except (AttributeError, TypeError, ValueError):
+                append(None)
+        for i in _risky_rows([o or b"" for o in outs], n):
+            p = _source_payload(loads(djs[i]))
+            outs[i] = canonical_media_ref(p.pop("entity_type"), **p).encode()
+        yield from_rows(schema, [],
+                        doc_id=owned(batch.column(idx("doc_id"))),
+                        span_offset=owned(batch.column(idx("span_offset"))),
+                        media_ref=bytes_string_array(outs))
 
 
 def rebuild_media_refs(entities: DataFrame) -> DataFrame:
     """entities → (doc_id, span_offset, media_ref) with the media_ref
-    payload re-serialized canonically from the stored data_json.
-
-    Arrow-native by default (see _rebuild_arrow_batches); the pandas twin
-    is kept for A/B equality testing, and is the only path when orjson is
-    unavailable (the batched fast path IS the orjson fast path)."""
+    payload re-serialized canonically from the stored data_json, in one
+    mapInArrow stage (see _rebuild_arrow_batches)."""
     src = entities.select("doc_id", "span_offset", "data_json")
-    if _orjson is None:  # pragma: no cover
-        return src.mapInPandas(_rebuild_batches, schema=_REF_SCHEMA)
     return src.mapInArrow(_rebuild_arrow_batches, schema=_REF_SCHEMA)
 
 

@@ -174,3 +174,27 @@ def test_no_package_module_imports_entry_or_tests():
                 if head in ("__spark_entry__", "tests", "scripts", "bench"):
                     bad.append(f"{rel}:{node.lineno} imports {n}")
     assert not bad, "\n".join(bad)
+
+
+# the row-wise stages cross the Python boundary as mapInArrow only; their
+# batches are pyarrow end to end
+_ARROW_ONLY = ("functions/arrow_batch.py", "functions/decode.py",
+               "operators/reconstruct.py", "operators/insert_expand.py",
+               "operators/area_selection.py")
+
+
+def test_arrow_stages_import_no_pandas():
+    bad = []
+    for rel in _ARROW_ONLY:
+        full = os.path.join(ROOT, *rel.split("/"))
+        tree = ast.parse(open(full, encoding="utf-8").read(), filename=full)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                names = [node.module or ""]
+            else:
+                continue
+            bad += [f"{rel}:{node.lineno} imports {n}" for n in names
+                    if n.split(".")[0] == "pandas"]
+    assert not bad, "\n".join(bad)

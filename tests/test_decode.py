@@ -198,49 +198,29 @@ def test_corpus_decodes_cleanly(media_payloads):
     assert all(e is None for e in errs)
 
 
-def test_arrow_and_pandas_paths_identical(spark, docs_df):
-    from dxf_postgis_converter_spark.functions.decode import decode_documents
-    a = decode_documents(docs_df, use_arrow=True)
-    b = decode_documents(docs_df, use_arrow=False)
-    assert a.schema == b.schema
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+def test_decoded_rows_equal_convert_entity(spark, docs_df):
+    """The Spark stage adds nothing to the per-payload conversion: every
+    decoded row is convert_entity(payload) plus its doc_id, span_offset
+    and media_ref, in the declared schema."""
+    from dxf_postgis_converter_spark.functions.decode import (
+        ENTITY_SCHEMA, decode_documents,
+    )
 
-
-def test_no_orjson_fallback_importable_and_equivalent():
-    """ADVICE r2 (high): the no-orjson branch must bind _loads to
-    json.loads, not reference itself. Re-import the module with orjson
-    masked and check _dumps/_loads round-trip matches the fast path."""
-    import importlib
-    import sys
-
-    import dxf_postgis_converter_spark.functions.decode as dec
-
-    payload = mk("CIRCLE", {"center": [1, 2, 0], "radius": 3.5})
-    fast = dec.convert_entity(payload)
-
-    saved = {k: sys.modules.pop(k) for k in list(sys.modules)
-             if k == "orjson" or k == dec.__name__}
-    sys.modules["orjson"] = None  # import orjson raises ImportError
-    try:
-        slow_mod = importlib.import_module(dec.__name__)
-        assert slow_mod._orjson is None
-        assert slow_mod._loads is json.loads
-        slow = slow_mod.convert_entity(payload)
-        assert slow["geometry_wkb"] == fast["geometry_wkb"]
-        assert json.loads(slow["data_json"]) == json.loads(fast["data_json"])
-        assert slow_mod._loads(slow_mod._dumps({"a": [1, 2.5]})) == {"a": [1, 2.5]}
-    finally:
-        sys.modules.pop("orjson", None)
-        sys.modules.pop(dec.__name__, None)
-        sys.modules.update(saved)
-        importlib.import_module(dec.__name__)
+    got = decode_documents(docs_df)
+    assert got.schema == ENTITY_SCHEMA
+    want = {(doc_id, s["offset"]): dict(
+                convert_entity(json.loads(s["media_ref"])), doc_id=doc_id,
+                span_offset=s["offset"], media_ref=s["media_ref"])
+            for doc_id, spans in docs_df.collect() for s in spans
+            if s["kind"] == "media"}
+    rows = {(r.doc_id, r.span_offset): r.asDict() for r in got.collect()}
+    assert len(rows) > 1000
+    assert rows == want
 
 
 def test_null_media_ref_is_one_error_row(spark):
-    """A null media_ref becomes one error row with a null media_ref, on
-    both decode paths; it must not fail its Arrow batch or change any
-    other row."""
+    """A null media_ref becomes one error row with a null media_ref; it
+    must not fail its Arrow batch or change any other row."""
     from dxf_postgis_converter_spark.corpus import SPANS_SCHEMA, build_document
     from dxf_postgis_converter_spark.functions.decode import decode_documents
 
@@ -250,33 +230,32 @@ def test_null_media_ref_is_one_error_row(spark):
     broken = list(docs)
     broken[1] = (doc_id, [dict(s, media_ref=None) if s is hit else s for s in spans])
 
-    def decoded(rows, use_arrow):
-        df = decode_documents(spark.createDataFrame(rows, SPANS_SCHEMA), use_arrow=use_arrow)
+    def decoded(rows):
+        df = decode_documents(spark.createDataFrame(rows, SPANS_SCHEMA))
         return {(r.doc_id, r.span_offset): r for r in df.collect()}
 
-    good = decoded(docs, True)
+    good = decoded(docs)
     assert not [r for r in good.values() if r.error is not None]
-    for use_arrow in (True, False):
-        bad = decoded(broken, use_arrow)
-        assert bad.keys() == good.keys()
-        assert [k for k in good if bad[k] != good[k]] == [(doc_id, hit["offset"])]
-        row = bad[(doc_id, hit["offset"])]
-        assert row.error is not None and row.media_ref is None
-        assert row.entity_type == "UNKNOWN"
-        assert sum(r.error is not None for r in bad.values()) == 1
+    bad = decoded(broken)
+    assert bad.keys() == good.keys()
+    assert [k for k in good if bad[k] != good[k]] == [(doc_id, hit["offset"])]
+    row = bad[(doc_id, hit["offset"])]
+    assert row.error is not None and row.media_ref is None
+    assert row.entity_type == "UNKNOWN"
+    assert sum(r.error is not None for r in bad.values()) == 1
 
 
 def test_bytes_string_array_nulls_and_offset_limit(monkeypatch):
     """Nulls go through the validity bitmap; a column past the int32
     offset range raises instead of wrapping (checked on a lowered limit)."""
-    import dxf_postgis_converter_spark.functions.decode as dec
+    import dxf_postgis_converter_spark.functions.arrow_batch as ab
 
-    arr = dec.bytes_string_array([b"a", None, b"bc", None])
+    arr = ab.bytes_string_array([b"a", None, b"bc", None])
     arr.validate(full=True)
     assert arr.to_pylist() == ["a", None, "bc", None] and arr.null_count == 2
-    assert dec.bytes_string_array([b"ab", b"c"]).null_count == 0
+    assert ab.bytes_string_array([b"ab", b"c"]).null_count == 0
 
-    monkeypatch.setattr(dec, "STRING_ARRAY_MAX_BYTES", 10)
-    assert dec.bytes_string_array([b"abcde", b"fghij"]).to_pylist() == ["abcde", "fghij"]
+    monkeypatch.setattr(ab, "STRING_ARRAY_MAX_BYTES", 10)
+    assert ab.bytes_string_array([b"abcde", b"fghij"]).to_pylist() == ["abcde", "fghij"]
     with pytest.raises(ValueError, match="int32 offset limit"):
-        dec.bytes_string_array([b"abcde", b"fghij", b"k"])
+        ab.bytes_string_array([b"abcde", b"fghij", b"k"])

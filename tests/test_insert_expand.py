@@ -165,7 +165,7 @@ def test_max_depth_bounds_expansion():
 
 def test_expand_inserts_spark_no_shuffle(spark):
     """The Spark wrapper: INSERT rows expand, non-INSERT rows are
-    ignored, and the plan has no Exchange (single mapInPandas stage)."""
+    ignored, and the plan has no Exchange (single mapInArrow stage)."""
     pay = _payload([
         _be("LINE", {"start": [0.0, 0.0, 0.0], "end": [1.0, 0.0, 0.0]}),
         _be("POINT", {"location": [2.0, 2.0, 0.0]}),
@@ -180,7 +180,7 @@ def test_expand_inserts_spark_no_shuffle(spark):
               "data_json string, entity_type string")
     out = expand_inserts(df)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    assert "Exchange" not in plan and plan.count("MapInArrow") == 1
     got = out.collect()
     assert len(got) == 2 and {r.insert_handle for r in got} == {"A1"}
     line = [r for r in got if r.entity_type == "LINE"][0]

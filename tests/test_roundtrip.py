@@ -97,23 +97,39 @@ def test_save_selected_by_handles(spark, docs):
     assert bad.count() == 0
 
 
-def test_rebuild_arrow_matches_pandas_twin(spark, docs):
-    """r8 optimization pin: the Arrow-native rebuild (batched float-risk
-    scan, in-place extra_data filter, from_buffers output) is row-for-row
-    byte-identical to the per-row _rebuild_one twin — including rows that
-    trip the float-risk fallback to stdlib json."""
+def test_rebuild_equals_stdlib_canonical_dump(spark, docs):
+    """The rebuild (orjson dump, batched float-risk scan, from_buffers
+    output) is byte-identical to the stdlib canonical dump of each stored
+    payload filtered to RT_EXTRA_KEYS — including rows that trip the
+    float-risk fallback to stdlib json."""
+    import json as _json
+
+    import pyarrow as pa
+
+    from dxf_postgis_converter_spark.corpus import _jdump
     from dxf_postgis_converter_spark.operators import reconstruct as rc
-    from dxf_postgis_converter_spark.functions.decode import decode_documents
+
+    def canonical(dj):
+        d = _json.loads(dj)
+        extra = d.get("extra_data") or {}
+        return _jdump({
+            "attributes": d.get("attributes") or {},
+            "entity_type": d.get("entity_type", ""),
+            "extra_data": {k: extra[k] for k in rc.RT_EXTRA_KEYS if k in extra},
+            "geometries": d.get("geometries") or {},
+            "handle": d.get("handle", ""),
+            "layer": d.get("layer", ""),
+            "name": d.get("name", ""),
+        })
 
     ents = decode_documents(docs).select("doc_id", "span_offset", "data_json")
     via_arrow = {(r.doc_id, r.span_offset): r.media_ref
                  for r in rc.rebuild_media_refs(ents).collect()}
-    via_rows = {(r.doc_id, r.span_offset): rc._rebuild_one(r.data_json)
-                for r in ents.collect()}
-    assert via_arrow == via_rows
+    via_stdlib = {(r.doc_id, r.span_offset): canonical(r.data_json)
+                  for r in ents.collect()}
+    assert via_arrow == via_stdlib
     # synthetic risky payloads: exponent-notation and sub-1e-4 floats must
-    # take the stdlib path in BOTH twins (byte-identical canonical form)
-    import json as _json
+    # take the stdlib path (byte-identical canonical form)
     risky = [
         {"attributes": {}, "entity_type": "POINT",
          "extra_data": {"dxftype": "POINT", "v": 1e30},
@@ -123,13 +139,11 @@ def test_rebuild_arrow_matches_pandas_twin(spark, docs):
          "extra_data": {}, "geometries": {}, "handle": "a2", "layer": "L",
          "name": "x"},
     ]
-    djs = [_json.dumps(p, ensure_ascii=False, sort_keys=True,
-                       separators=(",", ":")) for p in risky]
-    import pyarrow as pa
+    djs = [_jdump(p) for p in risky]
     batch = pa.RecordBatch.from_arrays(
         [pa.array(["d"] * len(djs)), pa.array(range(len(djs)), pa.int32()),
          pa.array(djs)], names=["doc_id", "span_offset", "data_json"])
     out = list(rc._rebuild_arrow_batches([batch]))[0].column(2).to_pylist()
-    assert out == [rc._rebuild_one(dj) for dj in djs]
+    assert out == [canonical(dj) for dj in djs]
     assert "1e-07" in out[0]          # stdlib exponent form, not orjson's
     assert "1.234e-05" in out[1]
